@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Session-gated materialization for multi-consumer intermediate frames.
@@ -43,5 +44,16 @@ object Caching {
     def pinnedEager: DataFrame =
       if (reliable(df)) df.persist(StorageLevel.MEMORY_AND_DISK)
       else df.localCheckpoint(eager = true)
+
+    /** Release a frame returned by `pinned`/`pinnedEager` now rather than
+      * when the driver's ContextCleaner next runs — for pins made once per
+      * call of a long-lived operation. The mode is read again, so it must
+      * not change between the pin and its release. */
+    def unpin(): Unit =
+      if (reliable(df)) df.unpersist(blocking = false)
+      else df.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+        case _ => ()
+      }
   }
 }

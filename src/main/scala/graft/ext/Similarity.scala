@@ -1505,13 +1505,29 @@ object Similarity {
     * form computed, so bucket membership is bit-identical. */
   private def nearestCidOf(nv: Column, nn: Column,
                            centRows: Seq[(Long, Seq[Double], Double)])
-      : Column = {
-    val centLit = typedLit(centRows.sortBy(_._1))
-    -array_max(transform(centLit, c =>
+      : Column =
+    -array_max(scoredCids(nv, nn, centRows)).getField("nc")
+
+  /** The `n` best buckets of each vector as an array of cids, map-side:
+    * [[nearestCidOf]]'s (csim, −cid) structs sorted DESCENDING — csim
+    * DESC, cid ASC, NaN above every number and NULL below, the exact
+    * order of a window `orderBy(csim.desc, cid.asc)` — then cut to `n`.
+    * No shuffle: the ranking runs in the probe scan's own stage. */
+  private def topCidsOf(nv: Column, nn: Column,
+                        centRows: Seq[(Long, Seq[Double], Double)],
+                        n: Int): Column =
+    transform(slice(sort_array(scoredCids(nv, nn, centRows), asc = false),
+      1, n), x => -x.getField("nc"))
+
+  /** One (csim = dot(nv,cv)/(nn·cn), nc = −cid) struct per centroid, the
+    * model baked into the plan as a literal array. */
+  private def scoredCids(nv: Column, nn: Column,
+                         centRows: Seq[(Long, Seq[Double], Double)])
+      : Column =
+    transform(typedLit(centRows.sortBy(_._1)), c =>
       struct((dot(nv, c.getField("_2")) / (nn * c.getField("_3")))
           .as("csim"),
-        (-c.getField("_1")).as("nc")))).getField("nc")
-  }
+        (-c.getField("_1")).as("nc")))
 
   /** (cid, cv, cn) rows of a collected centroid frame, the input shape
     * [[nearestCidOf]] bakes into the plan. */
@@ -1683,7 +1699,8 @@ object Similarity {
     *     forge a delete token's file prefix or marker (or vice versa),
     *     closing the replay-cross-talk hole a shared flat namespace had.
     *
-    * Probing reads the bounded centroid table, ranks buckets per probe,
+    * Probing resolves the bounded centroid model (cached per model
+    * version, see `Models`), ranks buckets per probe map-side against it,
     * and then — the point of the layout — filters the index scan with the
     * probe batch's DISTINCT bucket list (bounded by min(nCentroids,
     * nprobe·|batch|) values, collected as plan metadata exactly like the
@@ -1762,6 +1779,64 @@ object Similarity {
   private[graft] def hfs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Driver-side cache of published index models. A model directory never
+    * changes once a pointer names it, so what its readers need — the
+    * centroid rows, and the schema of the lists built against the model —
+    * is resolved once per model instead of once per call (a collect job
+    * plus a one-task parquet schema-inference job each time). The key is
+    * the model directory plus its listing (name, length, mtime): one
+    * `listStatus`, no job. A rebuild at the same path after the old
+    * index was deleted writes new part files (new names and mtimes), so a
+    * reused `centroids.v0` never hits a stale entry. Holds the `MaxModels`
+    * most recently used models; each is nCentroids × dim doubles, the
+    * size the probe already bakes into its plan as a literal. */
+  private object Models {
+    private val MaxModels = 16
+    private type Key = (String, Seq[(String, Long, Long)])
+    private final class Model {
+      var cent: Seq[(Long, Seq[Double], Double)] = _
+      var listsSchema: StructType = _
+    }
+    private val cache = new java.util.LinkedHashMap[Key, Model](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Model]): Boolean =
+        size() > MaxModels
+    }
+
+    /** None when the model directory is absent (a pointer-less legacy
+      * layout): such readers are not cached. */
+    private def model(spark: SparkSession, dir: String): Option[Model] = {
+      val listing =
+        try Some(hfs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+          .toSeq.map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+          .sorted)
+        catch { case _: java.io.FileNotFoundException => None }
+      listing.map(l => cache.synchronized(cache.computeIfAbsent((dir, l), _ => new Model)))
+    }
+
+    /** (cid, cv, cn) rows of the centroid model in `dir`. */
+    def centroids(spark: SparkSession, dir: String)
+        : Seq[(Long, Seq[Double], Double)] = {
+      def load() = centTuples(spark.read.parquet(dir).collect().toIndexedSeq)
+      model(spark, dir).fold(load()) { m =>
+        m.synchronized { if (m.cent == null) m.cent = load(); m.cent }
+      }
+    }
+
+    /** The inverted lists in `listsDir`, read with the schema cached for
+      * `modelDir` (appends, deletes and compactions rewrite the lists
+      * with the build's schema; only a rebuild — a new model — changes it). */
+    def lists(spark: SparkSession, modelDir: String, listsDir: String): DataFrame = {
+      def infer() = spark.read.parquet(listsDir).schema
+      val schema = model(spark, modelDir).fold(infer()) { m =>
+        m.synchronized {
+          if (m.listsSchema == null) m.listsSchema = infer()
+          m.listsSchema
+        }
+      }
+      spark.read.schema(schema).parquet(listsDir)
+    }
+  }
 
   /** Read `index.ptr` → (lists dir name, centroids dir name). `None` when
     * the pointer is absent, empty, or transiently unreadable after
@@ -1943,9 +2018,8 @@ object Similarity {
     val spark = delta.sparkSession
     graft.GraftExtensions.ensure(spark)
     val (idxDir, centDir) = ivfIndexDirs(spark, path)
-    val centRows = centTuples(
-      spark.read.parquet(centDir).collect().toIndexedSeq)
-    assignToModel(prep(delta, idCol, vecCol, "nid", "nv", "nn"), centRows)
+    assignToModel(prep(delta, idCol, vecCol, "nid", "nv", "nn"),
+      Models.centroids(spark, centDir))
       .write.partitionBy("bucket").mode("append")
       .parquet(idxDir)
   }
@@ -2003,10 +2077,9 @@ object Similarity {
       return
     }
     val (idxDirStr, centDir) = ivfIndexDirs(spark, path)
-    val centRows = centTuples(
-      spark.read.parquet(centDir).collect().toIndexedSeq)
     val indexDir = new org.apache.hadoop.fs.Path(idxDirStr)
-    assignToModel(prep(delta, idCol, vecCol, "nid", "nv", "nn"), centRows)
+    assignToModel(prep(delta, idCol, vecCol, "nid", "nv", "nn"),
+      Models.centroids(spark, centDir))
       .write.partitionBy("bucket").mode("overwrite")
       .parquet(staging.toString)
     publishTokenStaged(fs, indexDir, staging, marker, token)
@@ -2108,13 +2181,14 @@ object Similarity {
     }
     val del = broadcast(
       ids.select(col(idCol).cast(LongType).as("del_id")).distinct())
-    val idx = ivfIndexDataDir(spark, path)
-    val affected = spark.read.parquet(idx)
+    val (idx, modelDir) = ivfIndexDirs(spark, path)
+    val lists = Models.lists(spark, modelDir, idx)
+    val affected = lists
       .join(del, col(keyCol) === col("del_id"), "left_semi")
       .select("bucket").distinct()
       .collect().map(_.getString(0)).sorted // bounded by the bucket count
     if (affected.nonEmpty) {
-      val kept = spark.read.parquet(idx)
+      val kept = lists
         .where(col("bucket").isin(affected.toSeq: _*))
         .join(del, col(keyCol) === col("del_id"), "left_anti")
         // repairs torn duplicates from a crashed attempt
@@ -2250,7 +2324,7 @@ object Similarity {
         n.stripPrefix("index.v").toLong }
       .foldLeft(-1L)(math.max)
     val next = s"index.v${maxV + 1}"
-    spark.read.parquet(current)
+    Models.lists(spark, curCent, current)
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode("overwrite")
       .parquet(s"$path/$next")
@@ -2272,30 +2346,40 @@ object Similarity {
     * probed buckets' partitions (see the layout note above). */
   def ivfIndexProbe(probes0: DataFrame, idCol: String, vecCol: String,
                     path: String, k: Int, nprobe: Int = 3): DataFrame = {
+    val (probeBuckets, index) = probeIndex(probes0, idCol, vecCol, path, nprobe)
+    topKInBuckets(probeBuckets, index, k)
+  }
+
+  /** The front half of both index probes: each probe's `nprobe` buckets,
+    * ranked map-side against the cached model ([[topCidsOf]] — no
+    * cross-join window, no shuffle), and the lists scan pruned to the
+    * batch's DISTINCT bucket list. That list is bounded by
+    * min(nCentroids, nprobe·|batch|) strings — plan metadata, the same
+    * bounded-collect class as the centroid literal, never corpus data;
+    * Spark turns it into static partition pruning. The bucket ranking is
+    * cheap map work against a literal, so the one recompute beats leaving
+    * a persist behind in a long-lived driver. */
+  private def probeIndex(probes0: DataFrame, idCol: String, vecCol: String,
+                         path: String, nprobe: Int): (DataFrame, DataFrame) = {
     val spark = probes0.sparkSession
     graft.GraftExtensions.ensure(spark)
     val (idxDir, centDir) = ivfIndexDirs(spark, path)
-    val centDf = spark.read.parquet(centDir)
-    val cent = spark.createDataFrame(
-      java.util.Arrays.asList(centDf.collect(): _*), centDf.schema)
-    val probes = prep(probes0, idCol, vecCol, "pid", "pv", "pn")
-    val wProbe = Window.partitionBy(col("pid"))
-      .orderBy(col("csim").desc, col("cid").asc)
-    val probeBuckets = probes.join(broadcast(cent), lit(true))
-      .withColumn("csim", dot(col("pv"), col("cv")) / (col("pn") * col("cn")))
-      .withColumn("crank", row_number().over(wProbe))
-      .where(col("crank") <= nprobe)
+    val probeBuckets = prep(probes0, idCol, vecCol, "pid", "pv", "pn")
+      .select(col("pid"), col("pv"), col("pn"),
+        explode(topCidsOf(col("pv"), col("pn"),
+          Models.centroids(spark, centDir), math.max(nprobe, 0))).as("cid"))
       .select(col("pid"), col("pv"), col("pn"),
         concat(lit("c"), col("cid")).as("bucket"))
-    // the probe batch's bucket list: bounded by min(nCentroids,
-    // nprobe·|batch|) STRINGS — plan metadata, same bounded-collect class
-    // as the centroid literal, never corpus data. probeBuckets is cheap
-    // (|batch| × nCentroids map work against a broadcast literal), so the
-    // one recompute beats leaving a persist behind in a long-lived driver.
     val buckets = probeBuckets.select("bucket").distinct()
       .collect().map(_.getString(0)).sorted
-    val index = spark.read.parquet(idxDir)
-      .where(col("bucket").isin(buckets.toSeq: _*))
+    (probeBuckets, Models.lists(spark, centDir, idxDir)
+      .where(col("bucket").isin(buckets.toSeq: _*)))
+  }
+
+  /** The back half: exact cosine of each probe against its buckets'
+    * members, top-k per probe (ties by ascending nid). */
+  private def topKInBuckets(probeBuckets: DataFrame, index: DataFrame,
+                            k: Int): DataFrame = {
     val w = Window.partitionBy(col("pid"))
       .orderBy(col("sim").desc, col("nid").asc)
     broadcast(probeBuckets).join(index, Seq("bucket"))
@@ -2330,42 +2414,16 @@ object Similarity {
                             nprobe: Int = 3,
                             broadcastAllowlist: Boolean = true)
       : DataFrame = {
-    val spark = probes0.sparkSession
-    graft.GraftExtensions.ensure(spark)
-    val (idxDir, centDir) = ivfIndexDirs(spark, path)
-    val centDf = spark.read.parquet(centDir)
-    val cent = spark.createDataFrame(
-      java.util.Arrays.asList(centDf.collect(): _*), centDf.schema)
-    val probes = prep(probes0, idCol, vecCol, "pid", "pv", "pn")
-    val wProbe = Window.partitionBy(col("pid"))
-      .orderBy(col("csim").desc, col("cid").asc)
-    val probeBuckets = probes.join(broadcast(cent), lit(true))
-      .withColumn("csim", dot(col("pv"), col("cv")) / (col("pn") * col("cn")))
-      .withColumn("crank", row_number().over(wProbe))
-      .where(col("crank") <= nprobe)
-      .select(col("pid"), col("pv"), col("pn"),
-        concat(lit("c"), col("cid")).as("bucket"))
-    val buckets = probeBuckets.select("bucket").distinct()
-      .collect().map(_.getString(0)).sorted
+    val (probeBuckets, pruned) = probeIndex(probes0, idCol, vecCol, path, nprobe)
     val allowIds = allowed
       .select(col(allowedIdCol).cast(LongType).as("nid")).distinct()
-    val pruned = spark.read.parquet(idxDir)
-      .where(col("bucket").isin(buckets.toSeq: _*))
     val index =
       if (broadcastAllowlist)
         pruned.join(broadcast(allowIds), Seq("nid"), "left_semi")
       else // unbounded allowlist: shuffle both sides on nid, never
         // materialize the id set on one node
         pruned.join(allowIds.hint("shuffle_hash"), Seq("nid"), "left_semi")
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("sim").desc, col("nid").asc)
-    broadcast(probeBuckets).join(index, Seq("bucket"))
-      .where(col("nid") =!= col("pid"))
-      .withColumn("sim",
-        round(dot(col("pv"), col("nv")) / (col("pn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("pid"), col("rank"), col("nid"), col("sim"))
+    topKInBuckets(probeBuckets, index, k)
   }
 
   /** X110c — persisted IVF+PQ index BUILD: the on-disk form of

@@ -40,9 +40,11 @@ class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
   * idempotent re-run does naturally.
   *
   * Committed `placements` are duplicate-free as written by the sync engine
-  * (snapshots are deduplicated before commit). The sync no-op fast path
-  * compares symmetric set differences, so an externally seeded catalog
-  * with duplicate rows degrades nothing — `except` is distinct-based.
+  * (snapshots are deduplicated before commit). An externally seeded
+  * catalog with duplicate rows degrades nothing: the sync compares each
+  * shard's sorted placement list against the source's set, so the
+  * duplicate reads as a change and the next sync rewrites the slice
+  * deduplicated.
   */
 class MetaStore(spark: SparkSession, root: String) {
 
@@ -284,10 +286,10 @@ class MetaStore(spark: SparkSession, root: String) {
     * responsible for the "unchanged" claim (the sync engine derives it
     * from its own diffs).
     *
-    * `gate` is a validation action (e.g. the sync guards) evaluated
-    * CONCURRENTLY with the write jobs: its failure aborts the commit with
-    * the catalog untouched — the pointer never flips and the claimed
-    * version directory is deleted, exactly like a failed
+    * `gate` is a validation action (e.g. the tolerant sync's guards)
+    * evaluated CONCURRENTLY with the write jobs: its failure aborts the
+    * commit with the catalog untouched — the pointer never flips and the
+    * claimed version directory is deleted, exactly like a failed
     * `expectedVersion` check. Overlapping validation with the writes
     * removes a sequential job from every guarded commit while preserving
     * the observable contract (old state or new state, never partial). */

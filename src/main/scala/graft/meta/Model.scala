@@ -1,7 +1,5 @@
 package graft.meta
 
-import org.apache.spark.sql.DataFrame
-
 /** One shard placement — a block replica on a host. Mirrors the reference's
   * row type (ShardPlacement.java:6-21): equality on all three fields, total
   * order (shardId, shardLength, hostname) (ShardPlacement.java:47-98).
@@ -14,15 +12,3 @@ case class ShardPlacement(shard_id: Long, shard_length: Long, hostname: String)
   */
 case class ShardInfo(table_id: Long, shard_id: Long, storage: String,
                      min_value: Option[String], max_value: Option[String])
-
-/** The five-way metadata diff (HdfsSynchronizer.java:109-134): what must be
-  * created/dropped to make the catalog converge to the source snapshot.
-  * All members are lazy DataFrames — nothing executes until the sync
-  * applies them, so Catalyst plans the whole diff+apply as few jobs.
-  */
-case class MetadataDiff(
-    newShardIds: DataFrame,      // source − catalog (ids)
-    oldShardIds: DataFrame,      // catalog − source (ids)
-    catalogPlacements: DataFrame, // catalog snapshot (placements)
-    newPlacements: DataFrame,    // source − catalog (placements)
-    oldPlacements: DataFrame)    // catalog − source (placements)

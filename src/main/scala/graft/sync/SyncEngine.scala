@@ -2,8 +2,10 @@ package graft.sync
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.meta.{MetaStore, MetadataDiff}
+import graft.Caching._
+import graft.meta.MetaStore
 import graft.ops.CoreOps
 
 /** Snapshot-inconsistency abort, mirroring the reference's global abort
@@ -28,23 +30,25 @@ case class SyncResult(version: Long, skippedCount: Long,
                       skipped: Array[(String, Long, Long, String)])
 
 /** The reference's whole program as one function (SURVEY §3.1):
-  * source snapshot → five-way diff → validate → atomically apply.
+  * source snapshot → per-shard diff → validate → atomically apply.
   *
   * Where the reference walks O(shards × replicas) sequential RPC/JDBC round
-  * trips (HdfsSynchronizer.java:226-318), this engine expresses each stage
-  * as a declarative plan: the diffs are `except`s (shuffled hash
-  * aggregations at scale), the guards are semi/anti joins, and the apply is
-  * one atomic two-table commit. Node boundaries become shuffle boundaries.
+  * trips (HdfsSynchronizer.java:226-318), this engine expresses the diff as
+  * ONE group-by on `shard_id` over a tagged union of the four inputs
+  * (source ids, this table's catalog ids, source placements, catalog
+  * placements — see [[SyncEngine.shardDiff]]): one shuffle keyed on the
+  * shard id, whatever the table size, and every later question — no-op?
+  * guard violated? which ids are new or old? — is a scan of that per-shard
+  * frame. The apply is one atomic two-table commit.
   *
   * Scoping: placements carry no table id (pg_dist_shard_placement has none);
   * the reference scopes them per table by joining through pg_dist_shard on
   * logicalrelid (CitusMasterNode.java:33-37, MASTER_FETCH_TABLE_SHARD_
-  * PLACEMENTS). Same here — every diff/guard/no-op check runs against THIS
-  * table's placements (semi-join on the table's catalog shard ids), and a
-  * commit rewrites only this table's slice, preserving every other table's
-  * rows. Shard ids are globally unique across tables (they are HDFS block
-  * ids — HdfsSynchronizer.java:136-141), which is what makes the semi-join
-  * scoping exact.
+  * PLACEMENTS). Same here — a shard's catalog placements count only when
+  * the shard is in THIS table's catalog, and a commit rewrites only this
+  * table's slice, preserving every other table's rows. Shard ids are
+  * globally unique across tables (they are HDFS block ids —
+  * HdfsSynchronizer.java:136-141), which is what makes the scoping exact.
   *
   * Idempotence (README.md:10-13): sync(sync(s)) == sync(s) — after a sync
   * the catalog equals the source snapshot, so the next diff is empty.
@@ -53,56 +57,41 @@ case class SyncResult(version: Long, skippedCount: Long,
   */
 class SyncEngine(spark: SparkSession, store: MetaStore) {
 
-  /** This table's placement slice of the global placements table —
-    * the MASTER_FETCH_TABLE_SHARD_PLACEMENTS analog. */
-  private def scopedPlacements(catalogIds: DataFrame): DataFrame =
-    store.placements.join(catalogIds.select("shard_id"), Seq("shard_id"), "left_semi")
-
-  /** Diff the source snapshot against the catalog
-    * (HdfsSynchronizer.java:142-205). `sourceIds` and `sourcePlacements`
-    * arrive separately — like the reference's two NameNode scans — so they
-    * can disagree; the guards catch that.
-    *
-    * @param sourceIds        one column `shard_id`
-    * @param sourcePlacements columns (shard_id, shard_length, hostname)
-    */
-  def calculateDiff(tableId: Long, sourceIds: DataFrame,
-                    sourcePlacements: DataFrame): MetadataDiff = {
-    val catalogIds = store.shards.where(col("table_id") === tableId)
-      .select("shard_id")
-    val catalogPlacements = scopedPlacements(catalogIds)
-    MetadataDiff(
-      newShardIds = CoreOps.diffNew(sourceIds, catalogIds),
-      oldShardIds = CoreOps.diffOld(sourceIds, catalogIds),
-      catalogPlacements = catalogPlacements,
-      newPlacements = CoreOps.diffNew(sourcePlacements, catalogPlacements),
-      oldPlacements = CoreOps.diffOld(sourcePlacements, catalogPlacements))
-  }
+  /** The per-shard diff of the source snapshot against this table's
+    * catalog slice (HdfsSynchronizer.java:142-205) — see
+    * [[SyncEngine.shardDiff]]. `sourceIds` and `sourcePlacements` arrive
+    * separately, like the reference's two NameNode scans, so they can
+    * disagree; the guards catch that. */
+  private def diffOf(tableId: Long, sourceIds: DataFrame,
+                     sourcePlacements: DataFrame): DataFrame =
+    SyncEngine.shardDiff(sourceIds,
+      store.shards.where(col("table_id") === tableId), sourcePlacements,
+      store.placements)
 
   /** Validate + apply (HdfsSynchronizer.java:215-332). Optional `stats`
     * (shard_id, min_value, max_value) attaches min/max statistics to new
     * shards — the --fetch-min-max path (§3.3), computed as ONE distributed
     * aggregation by the caller instead of per-shard round trips.
-    * Returns the committed version.
+    * Returns the committed version, or the current one when the snapshot
+    * already equals the catalog (nothing is written).
     *
-    * The apply stage exploits two algebraic collapses the reference's
-    * incremental form hides (it HAD to apply deltas through JDBC; a
-    * full-overwrite commit does not):
+    * The per-shard frame is pinned and read twice:
     *
-    *   1. The post-apply placement set (catalog − old) ∪ new is exactly
-    *      the SOURCE set: (catalog ∩ source) ∪ (source − catalog) =
-    *      source. So view maintenance, both guards, and the commit read
-    *      the cached source snapshot — the two placement-level `except`s
-    *      (the dominant shuffles: full-width rows both directions)
-    *      disappear from the apply path entirely.
-    *   2. Placement row-diffs are then needed only for NO-OP DETECTION,
-    *      and only when the id sets are identical — counts first (unequal
-    *      sizes prove a change with no except shuffle at all), then one
-    *      one-directional except (equal counts + empty src−cat ⇒ sets
-    *      equal), skipped whenever the id diff already proves a change.
-    *   3. When the id sets are identical, BOTH guards are vacuous (their
-    *      inputs — the id diffs — are empty), so the guard job itself is
-    *      skipped; it runs only on the id-changing path it can fail on.
+    *   1. ONE summary aggregate decides everything before the commit:
+    *      whether anything changed (the no-op return), and both guards —
+    *      J5, a removed shard must have NO placements in the post-apply
+    *      set (HdfsSynchronizer.java:263-273), checked first; J6, a new
+    *      shard must have at least one (HdfsSynchronizer.java:282-289).
+    *      Each reports its smallest violating shard id.
+    *   2. The commit reads the id diffs and the post-apply placement set
+    *      from it. That set is exactly the deduplicated SOURCE set —
+    *      (catalog − old) ∪ new = source — so it is an explode of each
+    *      shard's source placements, with no placement-level set
+    *      difference anywhere on the apply path.
+    *
+    * A catalog slice holding duplicate rows reads as changed (its sorted
+    * placement list differs from the source's set) and is rewritten
+    * deduplicated.
     */
   def sync(tableId: Long, sourceIds: DataFrame, sourcePlacements: DataFrame,
            stats: Option[DataFrame] = None): Long = {
@@ -110,69 +99,26 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
     // optimistic-concurrency token (a rival committing mid-sync makes the
     // commit throw ConcurrentCommitException instead of losing its update)
     val baseVersion = store.currentVersion
-    val catalogIds = store.shards.where(col("table_id") === tableId)
-      .select("shard_id")
-    val catalogPlacements = scopedPlacements(catalogIds)
-    val srcIds = sourceIds.select("shard_id").dropDuplicates().persist()
-    val srcPl = sourcePlacements.select("shard_id", "shard_length", "hostname")
-      .dropDuplicates().persist()
-    val newShardIds = CoreOps.diffNew(srcIds, catalogIds).persist()
-    val oldShardIds = CoreOps.diffOld(srcIds, catalogIds).persist()
+    val diff = diffOf(tableId, sourceIds, sourcePlacements).pinned
     try {
-      // No-op fast path (README.md:10-13): id diffs first — a union of two
-      // persisted narrow sets, whose shuffles the apply path needs anyway
-      // (putting more legs in the id-check union would drag their shuffle
-      // stages into every apply-path job — parent stages run regardless of
-      // which union partitions a take() probes). Only if the id sets are
-      // identical does the placement comparison run: counts first (unequal
-      // sizes prove a change with no except shuffle — srcPl is deduped, so
-      // a dup-bearing catalog slice just reads as changed and gets
-      // rewritten deduped), then ONE one-directional except — equal counts
-      // plus empty src−cat proves set equality without the reverse except.
-      // Both sides are scoped to this table — another table's rows must
-      // not defeat the fast path.
-      // coalesce(1) collapses the probe to ONE job with one task: a
-      // limit(1) over a 64-partition union otherwise escalates through
-      // ceil(log4(P)) jobs when the diffs are EMPTY (the steady-state
-      // no-op case) — and empty cached partitions cost the single task
-      // nothing to walk, while a non-empty diff short-circuits at its
-      // first row either way.
-      val one = (d: DataFrame) => d.select(lit(1).as("one"))
-      val idsChanged =
-        !one(newShardIds).union(one(oldShardIds)).coalesce(1).limit(1).isEmpty
-      def placementsChanged: Boolean = {
-        // both counts in ONE tagged-union job (no short-circuit exists
-        // between them — they are only ever compared to each other)
-        val counts = srcPl.select(lit("s").as("side"))
-          .unionByName(catalogPlacements.select(lit("c").as("side")))
-          .groupBy("side").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        counts.getOrElse("s", 0L) != counts.getOrElse("c", 0L) ||
-          !srcPl.except(catalogPlacements).coalesce(1).limit(1).isEmpty
-      }
-      val changed = idsChanged || placementsChanged
-      if (!changed) return baseVersion
-
-      // Guards J5 + J6 — skipped entirely when the id sets are unchanged
-      // (both read the id diffs as their subject: no removed shard can be
-      // orphaned and no new shard unplaced if neither exists). When they
-      // can fail, both run as ONE job (they read the same persisted
-      // inputs; a second action would only pay scheduler overhead again),
-      // CONCURRENT with the commit's writes as its gate — a violation
-      // still aborts with the catalog untouched (the pointer never flips):
-      // J5 — a removed shard must have NO remaining placements in the
-      // post-apply set, i.e. in the source snapshot
-      // (HdfsSynchronizer.java:263-273); J6 — a new shard must have at
-      // least one placement (HdfsSynchronizer.java:282-289).
-      val guards = if (!idsChanged) None else Some(() =>
-        checkGuards(oldShardIds, newShardIds, srcPl,
-          orphanMsg = id => s"shard $id was removed but still has placements",
-          unplacedMsg = id => s"shard $id is new but has no placements"))
-
-      commitState(tableId, catalogIds, newShardIds, oldShardIds, srcPl, stats,
-        baseVersion, shardsUnchanged = !idsChanged, gate = guards)
-    } finally
-      Seq(srcIds, srcPl, newShardIds, oldShardIds).foreach(_.unpersist())
+      val s = diff.agg(
+        count_if(col("is_new") || col("is_old")),
+        count_if(col("pl_changed")),
+        min(when(col("is_old") && size(col("src_pl")) > 0, col("shard_id"))),
+        min(when(col("is_new") && size(col("src_pl")) === 0, col("shard_id"))))
+        .head()
+      val idsChanged = s.getLong(0) > 0
+      if (!idsChanged && s.getLong(1) == 0) return baseVersion
+      if (!s.isNullAt(2))
+        throw new SyncAbortException(
+          s"shard ${s.getLong(2)} was removed but still has placements")
+      if (!s.isNullAt(3))
+        throw new SyncAbortException(
+          s"shard ${s.getLong(3)} is new but has no placements")
+      commitState(tableId, diff, diff.select(col("shard_id"),
+          inline(col("src_pl"))), stats, baseVersion,
+        shardsUnchanged = !idsChanged)
+    } finally diff.unpin()
   }
 
   /** T4 — fault-tolerant apply (HdfsSynchronizer.java:228-251, :339-364,
@@ -203,20 +149,17 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
                    workerApply: DataFrame => DataFrame = SyncEngine.allOk,
                    stats: Option[DataFrame] = None): SyncResult = {
     val baseVersion = store.currentVersion
-    val catalogIds = store.shards.where(col("table_id") === tableId)
-      .select("shard_id")
-    val catalogPlacements = scopedPlacements(catalogIds).persist()
-    val srcIds = sourceIds.select("shard_id").dropDuplicates().persist()
-    val srcPl = sourcePlacements.select("shard_id", "shard_length", "hostname")
-      .dropDuplicates().persist()
-    val newShardIds = CoreOps.diffNew(srcIds, catalogIds).persist()
-    val oldShardIds = CoreOps.diffOld(srcIds, catalogIds).persist()
+    val diff = diffOf(tableId, sourceIds, sourcePlacements).pinned
+    // per shard: drops = catalog − source, creates = source − catalog, as
+    // array differences of the two sorted placement sets (distinct, like
+    // the reference's set differences)
+    def ops(op: String, from: String, minus: String): DataFrame =
+      diff.select(lit(op).as("op"), col("shard_id"),
+        inline(array_except(col(from), col(minus))))
     val plCols = Seq(col("shard_id"), col("shard_length"), col("hostname"))
-    val attempted = CoreOps.diffOld(srcPl, catalogPlacements)
-      .select(lit("drop").as("op") +: plCols: _*)
-      .unionByName(CoreOps.diffNew(srcPl, catalogPlacements)
-        .select(lit("create").as("op") +: plCols: _*))
-    val applied = workerApply(attempted).persist()
+    val applied = workerApply(
+      ops("drop", "cat_pl", "src_pl").unionByName(ops("create", "src_pl", "cat_pl")))
+      .persist()
     try {
       // Bounded skipped accounting: exact count + a capped sample. Both
       // actions scan the persisted `applied`; only the sample is collected,
@@ -234,34 +177,31 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
       // this set, NOT the source snapshot, because failures make them differ.
       val deleted = applied.where(col("op") === "drop" && col("ok")).select(plCols: _*)
       val inserted = applied.where(col("op") === "create" && col("ok")).select(plCols: _*)
+      val catalogPlacements = diff.select(col("shard_id"), inline(col("cat_pl")))
       val current = CoreOps.currentSet(catalogPlacements, deleted, inserted).persist()
 
       try {
-        // same single-job probe shape as the strict path (coalesce(1)
-        // collapses the empty-diff take escalation)
-        val idsChanged = !newShardIds.select(lit(1).as("one"))
-          .union(oldShardIds.select(lit(1).as("one")))
+        val idsChanged = !diff.where(col("is_new") || col("is_old"))
           .coalesce(1).limit(1).isEmpty
         val anyApplied = !applied.where(col("ok")).coalesce(1).limit(1).isEmpty
         if (!idsChanged && !anyApplied)
           return SyncResult(baseVersion, skippedCount, skipped)
 
-        // same vacuity argument as the strict path: a failed drop can only
-        // orphan a REMOVED shard, a failed create only unplace a NEW one —
-        // no id change, no failable guard
+        // a failed drop can only orphan a REMOVED shard, a failed create
+        // only unplace a NEW one — no id change, no failable guard. When
+        // they can fail, the guards gate the commit's writes concurrently:
+        // a violation still aborts with the catalog untouched.
         val guards = if (!idsChanged) None else Some(() =>
-          checkGuards(oldShardIds, newShardIds, current,
+          checkGuards(diff.where(col("is_old")).select("shard_id"),
+            diff.where(col("is_new")).select("shard_id"), current,
             orphanMsg = id => s"could not remove shard placements for shard $id",
             unplacedMsg = id => s"could not find shard placement for shard $id"))
 
-        val v = commitState(tableId, catalogIds, newShardIds, oldShardIds,
-          current, stats, baseVersion, shardsUnchanged = !idsChanged,
-          gate = guards)
+        val v = commitState(tableId, diff, current, stats, baseVersion,
+          shardsUnchanged = !idsChanged, gate = guards)
         SyncResult(v, skippedCount, skipped)
       } finally current.unpersist()
-    } finally
-      Seq(catalogPlacements, srcIds, srcPl, newShardIds, oldShardIds, applied)
-        .foreach(_.unpersist())
+    } finally { diff.unpin(); applied.unpersist() }
   }
 
   /** Both structural guards evaluated in one Spark action: violating shard
@@ -285,23 +225,23 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
 
   /** Shared commit tail: build the new shards table (kept + new, stats
     * attached — CitusMasterNode.java:221-242) and rewrite ONLY this table's
-    * placement slice, preserving every other table's rows.
+    * placement slice, preserving every other table's rows. The id diffs
+    * come from the pinned per-shard `diff`.
     *
     * `shardsUnchanged` (both id diffs proven empty — stats attach only to
     * NEW shards, so no row can differ) carries the shards table into the
     * new version as a filesystem copy instead of a scan+anti-join+union
     * rewrite: a placements-only sync writes placements and nothing else.
     */
-  private def commitState(tableId: Long, catalogIds: DataFrame,
-                          newShardIds: DataFrame, oldShardIds: DataFrame,
+  private def commitState(tableId: Long, diff: DataFrame,
                           tablePlacements: DataFrame,
                           stats: Option[DataFrame],
                           baseVersion: Long,
-                          shardsUnchanged: Boolean = false,
+                          shardsUnchanged: Boolean,
                           gate: Option[() => Unit] = None): Long = {
     val newShards = if (shardsUnchanged) None else Some {
       val newShardRows = {
-        val base = newShardIds
+        val base = diff.where(col("is_new"))
           .select(lit(tableId).as("table_id"), col("shard_id"),
             lit("f").as("storage"))
         stats match {
@@ -314,7 +254,8 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
         }
       }
       store.shards
-        .join(oldShardIds, Seq("shard_id"), "left_anti")
+        .join(diff.where(col("is_old")).select("shard_id"), Seq("shard_id"),
+          "left_anti")
         .select(col("table_id"), col("shard_id"), col("storage"),
           col("min_value"), col("max_value"))
         .union(newShardRows)
@@ -322,7 +263,8 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
     // Other tables' placements pass through untouched: the commit replaces
     // only the slice reachable from THIS table's (pre-sync) catalog ids.
     val otherPlacements = store.placements
-      .join(catalogIds.select("shard_id"), Seq("shard_id"), "left_anti")
+      .join(diff.where(col("in_cat")).select("shard_id"), Seq("shard_id"),
+        "left_anti")
     store.commitVersion(newShards,
       Some(otherPlacements.union(tablePlacements)), None,
       expectedVersion = Some(baseVersion), gate = gate)
@@ -352,6 +294,52 @@ class SyncEngine(spark: SparkSession, store: MetaStore) {
 object SyncEngine {
   /** Cap on the driver-side skipped-operation sample in SyncResult. */
   val maxSkippedSample = 1000
+
+  private val placementType = StructType(Seq(
+    StructField("shard_length", LongType), StructField("hostname", StringType)))
+
+  /** The sync diff as ONE group-by on `shard_id` over a tagged union of
+    * its four inputs: source ids, this table's catalog shards, source
+    * placements and ALL catalog placements. One row per shard id seen on
+    * any side:
+    *
+    *   - `in_src`, `in_cat`: the id is in the source / this table's catalog;
+    *   - `src_pl`: the sorted SET of source placements (shard_length,
+    *     hostname) — the deduplicated post-apply placements of the shard;
+    *   - `cat_pl`: the sorted LIST of catalog placements, kept only when
+    *     `in_cat` (the table scoping; another table's rows never count). A
+    *     list, not a set, so a slice with duplicate rows reads as changed;
+    *   - `is_new` = in_src ∧ ¬in_cat, `is_old` = in_cat ∧ ¬in_src, and
+    *     `pl_changed` = src_pl ≠ cat_pl.
+    *
+    * At scale this is one shuffle keyed on the (uniform) block id instead
+    * of one full-row EXCEPT shuffle per set difference; each shard's
+    * arrays are bounded by its replica count. */
+  private def shardDiff(sourceIds: DataFrame, catalogShards: DataFrame,
+                        sourcePlacements: DataFrame,
+                        catalogPlacements: DataFrame): DataFrame = {
+    def leg(df: DataFrame, tag: Int, withPl: Boolean): DataFrame =
+      df.select(col("shard_id").cast(LongType).as("shard_id"),
+        lit(tag).as("tag"),
+        (if (withPl) struct(col("shard_length").cast(LongType).as("shard_length"),
+          col("hostname").cast(StringType).as("hostname"))
+        else lit(null).cast(placementType)).as("pl"))
+    def plOf(tag: Int): Column = when(col("tag") === tag, col("pl"))
+    leg(sourceIds, 0, withPl = false)
+      .union(leg(catalogShards, 1, withPl = false))
+      .union(leg(sourcePlacements, 2, withPl = true))
+      .union(leg(catalogPlacements, 3, withPl = true))
+      .groupBy("shard_id")
+      .agg(bool_or(col("tag") === 0).as("in_src"),
+        bool_or(col("tag") === 1).as("in_cat"),
+        array_sort(collect_set(plOf(2))).as("src_pl"),
+        array_sort(collect_list(plOf(3))).as("cat_all"))
+      .select(col("shard_id"), col("in_src"), col("in_cat"), col("src_pl"),
+        filter(col("cat_all"), _ => col("in_cat")).as("cat_pl"))
+      .withColumn("is_new", col("in_src") && !col("in_cat"))
+      .withColumn("is_old", col("in_cat") && !col("in_src"))
+      .withColumn("pl_changed", col("src_pl") =!= col("cat_pl"))
+  }
 
   /** Default worker stage: every DDL op succeeds (the strict-path limit of
     * the tolerant sync). */

@@ -700,4 +700,114 @@ class SignLshSpec extends AnyFunSuite {
         .where(col("nid").isin(0L, 14L)).count() == 0,
       "the delete's retraction must survive every replay")
   }
+
+  private def probeRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+      r.getDouble(3))).sortBy(x => (x._1, x._2)).toSeq
+
+  test("IVF model cache: an index rebuilt at the same path (centroids.v0 " +
+      "reused) probes like a cold cache, also after a compaction and an append") {
+    val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
+    val probes = emb.where(col("vec_id") < 10)
+    def build(p: String) = Similarity.ivfIndexBuild(
+      emb.where(col("vec_id") % 3 =!= 0), "vec_id", "embedding", p,
+      nCentroids = 8, lloydIters = 1)
+    def probe(p: String) = probeRows(Similarity.ivfIndexProbe(probes,
+      "vec_id", "embedding", p, k = 5, nprobe = 2))
+    val reused = java.nio.file.Files.createTempDirectory("graft_idx_reuse_")
+      .toString
+    // first life: different vectors, probed so its model is cached
+    Similarity.ivfIndexBuild(emb.where(col("vec_id") % 3 === 0), "vec_id",
+      "embedding", reused, nCentroids = 8, lloydIters = 1)
+    probe(reused)
+    Similarity.hfs(spark, reused).delete(new org.apache.hadoop.fs.Path(reused), true)
+    build(reused)
+    assert(Similarity.ivfCentroidsDir(spark, reused).endsWith("centroids.v0"))
+    // the cold reference: the same build at a path never seen before
+    val cold = java.nio.file.Files.createTempDirectory("graft_idx_cold_")
+      .toString
+    build(cold)
+    assert(probe(reused) == probe(cold))
+    Seq(reused, cold).foreach(Similarity.ivfIndexCompact(spark, _))
+    assert(probe(reused) == probe(cold), "after a compaction")
+    Seq(reused, cold).foreach(Similarity.ivfIndexAppendIdempotent(
+      emb.where(col("vec_id") % 3 === 0), "vec_id", "embedding", _, "a1"))
+    assert(probe(reused) == probe(cold), "after an append")
+  }
+
+  test("IVF probe: zero-norm and NaN probe vectors pick the buckets of " +
+      "the window ranking") {
+    // cosine against a zero-norm probe divides by zero: ANSI mode (the
+    // default) raises, as the window ranking did; otherwise it is NULL.
+    // A NaN component makes it NaN. Both must rank like the window
+    // ranking (csim DESC — NaN first, NULL last — then cid ASC). A child
+    // session keeps the ANSI setting local.
+    val emb0 = Tables.load(spark, TestSpark.sfDir, "embeddings")
+    val path = java.nio.file.Files.createTempDirectory("graft_idx_nan_")
+      .toString
+    Similarity.ivfIndexBuild(emb0, "vec_id", "embedding", path,
+      nCentroids = 8, lloydIters = 1)
+    val dim = emb0.select(size(col("embedding"))).head.getInt(0)
+    def vecs(s: org.apache.spark.sql.SparkSession, xs: (Long, Float)*) =
+      s.createDataFrame(xs.map { case (id, x) => (id, Array.fill(dim)(x)) })
+        .toDF("vec_id", "embedding")
+    val e = intercept[ArithmeticException] {
+      Similarity.ivfIndexProbe(vecs(spark, (-1L, 0f)), "vec_id", "embedding",
+        path, k = 4, nprobe = 3).collect()
+    }
+    assert(e.getMessage.contains("DIVIDE_BY_ZERO"))
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    GraftExtensions.ensure(s)
+    val probes = vecs(s, (-1L, 0f), (-2L, Float.NaN), (-3L, 0.5f))
+    val (idxDir, centDir) = Similarity.ivfIndexDirs(s, path)
+    val pv = probes.select(col("vec_id").as("pid"), col("embedding").as("pv"))
+      .withColumn("pn", Similarity.norm(col("pv")))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("pid"))
+      .orderBy(col("csim").desc, col("cid").asc)
+    val buckets = pv.crossJoin(s.read.parquet(centDir))
+      .withColumn("csim", Similarity.dot(col("pv"), col("cv")) /
+        (col("pn") * col("cn")))
+      .withColumn("crank", row_number().over(w))
+      .where(col("crank") <= 3)
+      .select(col("pid"), col("pv"), col("pn"),
+        concat(lit("c"), col("cid")).as("bucket"))
+    val w2 = org.apache.spark.sql.expressions.Window.partitionBy(col("pid"))
+      .orderBy(col("sim").desc, col("nid").asc)
+    val expected = buckets.join(s.read.parquet(idxDir), Seq("bucket"))
+      .withColumn("sim", round(Similarity.dot(col("pv"), col("nv")) /
+        (col("pn") * col("nn")), 6))
+      .withColumn("rank", row_number().over(w2))
+      .where(col("rank") <= 4)
+      .select(col("pid"), col("rank"), col("nid"), col("sim"))
+    // NULL and NaN sims compared as strings
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        String.valueOf(r.get(3)))).sortBy(x => (x._1, x._2)).toSeq
+    val got = rows(Similarity.ivfIndexProbe(probes, "vec_id", "embedding",
+      path, k = 4, nprobe = 3))
+    assert(got.exists(_ == ((-1L, 1, got.find(_._1 == -1L).get._3, "null"))))
+    assert(got.exists(r => r._1 == -2L && r._4 == "NaN"))
+    assert(got == rows(expected))
+  }
+
+  test("job budget: a second ivfIndexProbe on an unchanged index runs no " +
+      "parquet schema inference and no centroid collect") {
+    val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
+    val path = java.nio.file.Files.createTempDirectory("graft_idx_budget_")
+      .toString
+    Similarity.ivfIndexBuild(emb, "vec_id", "embedding", path,
+      nCentroids = 8, lloydIters = 1)
+    val probes = emb.where(col("vec_id") < 10)
+    def probe() = Similarity.ivfIndexProbe(probes, "vec_id", "embedding",
+      path, k = 5, nprobe = 2).collect()
+    val first = probe()
+    var second: Array[org.apache.spark.sql.Row] = null
+    val (jobs, plans) = TestSpark.traced { second = probe() }
+    assert(second.toSeq == first.toSeq)
+    assert(!jobs.exists(_.startsWith("parquet at")),
+      s"schema inference re-ran:\n${jobs.mkString("\n")}")
+    assert(!plans.exists(_.contains("centroids.v")),
+      s"the centroid model was re-collected:\n${plans.mkString("\n\n")}")
+  }
 }

@@ -149,4 +149,72 @@ class SyncEngineSpec extends AnyFunSuite {
     val old = store.shards.where(col("shard_id") === 10L).collect().head
     assert(old.getAs[String]("min_value") == null)
   }
+
+  test("a snapshot breaking both guards aborts with the orphan message") {
+    val (store, engine) = freshStore()
+    seed(store)
+    val before = (store.currentVersion, placementSet(store), shardIdSet(store))
+    // 11 removed but still placed (J5) AND 99 new but unplaced (J6): the
+    // orphan guard is checked first, as in the reference
+    val e = intercept[SyncAbortException] {
+      engine.sync(1L, ids(10L, 99L),
+        pl((10L, 100L, "a"), (10L, 100L, "b"), (11L, 200L, "a")))
+    }
+    assert(e.getMessage == "shard 11 was removed but still has placements")
+    assert((store.currentVersion, placementSet(store), shardIdSet(store)) == before)
+  }
+
+  test("a re-run over a catalog slice with duplicate rows rewrites it deduplicated") {
+    val (store, engine) = freshStore()
+    val shards = Seq(ShardInfo(1L, 10L, "f", None, None),
+      ShardInfo(1L, 11L, "f", None, None)).toDF()
+    // an externally seeded catalog: (10,100,a) twice
+    store.commit(shards,
+      pl((10L, 100L, "a"), (10L, 100L, "a"), (10L, 100L, "b"), (11L, 200L, "a")))
+    val src = pl((10L, 100L, "a"), (10L, 100L, "b"), (11L, 200L, "a"))
+    val v0 = store.currentVersion
+    val v1 = engine.sync(1L, ids(10L, 11L), src)
+    assert(v1 > v0, "a duplicate-bearing slice reads as changed")
+    assert(store.placements.count() == 3 &&
+      placementSet(store) == Set((10L, 100L, "a"), (10L, 100L, "b"), (11L, 200L, "a")),
+      "the slice is rewritten without the duplicate")
+    assert(engine.sync(1L, ids(10L, 11L), src) == v1, "then the re-run is a no-op")
+  }
+
+  test("job budget: a no-op sync runs <= 4 Spark jobs, a delta sync <= 10") {
+    // the per-shard diff is one group-by: a no-op is that shuffle, the
+    // pin and one summary aggregate; a delta adds only the commit writes.
+    // The five except/count probes this replaced ran 15 and 21 jobs.
+    val (store, engine) = freshStore()
+    val t1 = (0L until 40L).map(i => 1000L + i)
+    val t2 = (0L until 40L).map(i => 5000L + i)
+    val hosts = Seq("a", "b", "c", "d")
+    def placed(xs: Seq[Long]) = xs.flatMap(id =>
+      Seq(0, 1).map(r => (id, id % 7, hosts(((id + r) % 4).toInt))))
+    store.commit(
+      (t1.map(ShardInfo(1L, _, "f", None, None)) ++
+        t2.map(ShardInfo(2L, _, "f", None, None))).toDF(),
+      pl(placed(t1) ++ placed(t2): _*))
+    val v0 = store.currentVersion
+    // warm the code paths once (the budget is about steady-state cycles)
+    assert(engine.sync(1L, ids(t1: _*), pl(placed(t1): _*)) == v0)
+
+    val (noop, _) = TestSpark.traced {
+      assert(engine.sync(1L, ids(t1: _*), pl(placed(t1): _*)) == v0)
+    }
+    assert(noop.size <= 4, s"no-op sync ran ${noop.size} jobs:\n${noop.mkString("\n")}")
+
+    // delta: 3 shards removed, 3 added, replicas of 3 more moved
+    val next = t1.drop(3) ++ (0L until 3L).map(i => 2000L + i)
+    val nextPl = placed(next).map {
+      case (id, len, h) if id < 1006L => (id, len, "z" + h)
+      case p => p
+    }
+    val (delta, _) = TestSpark.traced {
+      assert(engine.sync(1L, ids(next: _*), pl(nextPl: _*)) > v0)
+    }
+    assert(delta.size <= 10, s"delta sync ran ${delta.size} jobs:\n${delta.mkString("\n")}")
+    assert(shardIdSet(store) == (next ++ t2).toSet)
+    assert(placementSet(store) == (nextPl ++ placed(t2)).toSet)
+  }
 }
